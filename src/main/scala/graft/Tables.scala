@@ -16,14 +16,14 @@ object Tables {
 
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     // events.ts is TIMESTAMP(NANOS) in the driver fixture, which Spark
-    // cannot read as a timestamp; read it as ns-since-epoch LONG and
+    // cannot read as a timestamp; read it as ns-since-epoch LONG (the
+    // `nanosAsLong` conf Sessions.local sets at build time) and
     // truncate to µs exactly like DuckDB does (integer division — ns
     // values exceed 2^53 so this must never round-trip through DOUBLE).
     // Dispatch on the PHYSICAL type, not the fixture name: re-materialized
     // copies of the table (e.g. the derive_scale.py sf1 fixture, or any
     // user re-write through a µs-precision engine) arrive as TIMESTAMP /
     // TIMESTAMP_NTZ already, and `ts div 1000` on those is a type error.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = spark.read.parquet(s"$dir/$name.parquet")
     if (name == "events") {
       import org.apache.spark.sql.functions.{col, expr}

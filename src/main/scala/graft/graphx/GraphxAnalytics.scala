@@ -1,7 +1,7 @@
 package graft.graphx
 
 import graft.snap.EgoGraphs
-import org.apache.spark.graphx.{Graph, PartitionStrategy, VertexId}
+import org.apache.spark.graphx.{Graph, PartitionStrategy, TripletFields, VertexId}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -353,9 +353,7 @@ object GraphxAnalytics {
     *         `unpersist()` the graph; none touch edges. */
   private def iterateFixed(g0: Graph[Unit, Int], iters: Int,
       reset: VertexId => Long, init: VertexId => Long,
-      scale: Long = RankScale,
-      fields: org.apache.spark.graphx.TripletFields = org.apache.spark.graphx.TripletFields.Src)
-      : Graph[(Long, Long), Int] = {
+      scale: Long = RankScale): Graph[(Long, Long), Int] = {
     val rg0: Graph[(Long, Long), Int] = g0.outerJoinVertices(g0.outDegrees) {
       (vid, _, d) => (math.max(d.getOrElse(0).toLong, 1L), init(vid))
     }.cache()
@@ -364,14 +362,8 @@ object GraphxAnalytics {
     val nodes = rg0.vertices.count()
     requireFixedPointBounds(nodes, scale)
     if (iters <= 0) return rg0
-    // `send` reads ONLY srcAttr, so the per-round vertex ship into the
-    // edge partitions is declared TripletFields.Src: GraphX's
-    // ReplicatedVertexView then ships each round's updated (deg, rank)
-    // to the src-replica positions only, instead of src AND dst — the
-    // same declaration staticPageRank makes. Bit-identical results (the
-    // declaration only bounds what is shipped); the A/B knob `fields`
-    // exists solely for tools.PagerankAb to measure the ship saving
-    // same-JVM at 1M nodes.
+    // TripletFields.Src: `send` reads only srcAttr, so each round ships
+    // vertex state to the src replicas only.
     val send = (ctx: org.apache.spark.graphx.EdgeContext[(Long, Long), Int, Long]) =>
       ctx.sendToDst(ctx.srcAttr._2 / ctx.srcAttr._1)
     if (nodes <= LazyChainMaxNodes) {
@@ -382,7 +374,7 @@ object GraphxAnalytics {
       var rg = rg0
       var i = 0
       while (i < iters) {
-        val msgs = rg.aggregateMessages[Long](send, _ + _, fields)
+        val msgs = rg.aggregateMessages[Long](send, _ + _, TripletFields.Src)
         rg = rg.outerJoinVertices(msgs) { case (vid, (d, _), m) =>
           (d, reset(vid) + 85L * m.getOrElse(0L) / 100L)
         }
@@ -395,7 +387,7 @@ object GraphxAnalytics {
       rg
     } else {
       var rg = rg0
-      var msgs = rg.aggregateMessages[Long](send, _ + _, fields).cache()
+      var msgs = rg.aggregateMessages[Long](send, _ + _, TripletFields.Src).cache()
       msgs.count() // forces + caches rg's edges before the first join
       var i = 0
       while (i < iters) {
@@ -407,7 +399,7 @@ object GraphxAnalytics {
         if (i + 1 < iters) {
           // Next round's messages force + cache the new graph's edge view
           // (derived from prev's edge partitions) before prev is released.
-          msgs = rg.aggregateMessages[Long](send, _ + _, fields).cache()
+          msgs = rg.aggregateMessages[Long](send, _ + _, TripletFields.Src).cache()
           msgs.count()
         } else {
           rg.vertices.count() // final round: callers read vertices only
@@ -482,24 +474,12 @@ object GraphxAnalytics {
     * scale = 1e10 (rank_fp = rank·1e10). Returns (id, rank_fp),
     * materialized; the iteration graph is released before returning. */
   def pagerankFixedEdges(s: SparkSession, edges: RDD[(VertexId, VertexId)],
-      iters: Int, scale: Long): DataFrame =
-    pagerankFixedEdges(s, edges, iters, scale,
-      org.apache.spark.graphx.TripletFields.Src)
-
-  /** [[pagerankFixedEdges]] with the vertex-ship declaration explicit —
-    * the A/B knob for tools.PagerankAb (TripletFields.All is the pre-r15
-    * shape: it shipped each round's ranks to BOTH replica sides of every
-    * edge partition when `send` only reads the src side). Results are
-    * bit-identical across `fields` values by construction. */
-  private[graft] def pagerankFixedEdges(s: SparkSession,
-      edges: RDD[(VertexId, VertexId)], iters: Int, scale: Long,
-      fields: org.apache.spark.graphx.TripletFields): DataFrame = {
+      iters: Int, scale: Long): DataFrame = {
     import s.implicits._
     val g = Graph.fromEdgeTuples(edges, ())
       .partitionBy(PartitionStrategy.EdgePartition2D)
     val rg = iterateFixed(g, iters,
-      reset = _ => 15L * scale / 100L, init = _ => scale, scale = scale,
-      fields = fields)
+      reset = _ => 15L * scale / 100L, init = _ => scale, scale = scale)
     val out = rg.vertices.map { case (vid, (_, r)) => (vid, r) }
       .toDF("id", "rank_fp").cache()
     out.count()

@@ -43,8 +43,8 @@ object GraphAnalytics {
     * anti-joins broadcast; see GRAPH_SCALE_r14 kcore_plan_probe). The
     * exchange-count reduction is the CLUSTER claim, where exchanges are
     * network-bound; on local[32] the two forms are WALL-EQUIVALENT (two
-    * same-JVM KcoreAb A/B sessions, 8 samples: each arm spreads ~2.5-3×
-    * within a JVM and the best-draw ordering flips between sessions —
+    * same-JVM A/B sessions of `QueryAb kcore`, 8 samples: each arm spreads
+    * ~2.5-3× within a JVM and the best-draw ordering flips between sessions —
     * local exchanges run at memory speed, so never claim a local wall
     * win for this class without a repeated same-JVM A/B). The count
     * doubles as the fixpoint test: an empty dead set exits BEFORE the

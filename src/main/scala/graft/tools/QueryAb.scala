@@ -1,21 +1,34 @@
 package graft.tools
 
 import graft.Sessions
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.graphx.GraphxAnalytics
+import org.apache.spark.graphx.{EdgeContext, Graph, PartitionStrategy, TripletFields, VertexRDD}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Same-JVM A/B for r19 query reshapes. Cross-JVM walls on this host swing
-  * with page-cache/heap/ambient state, so each experiment times the OLD
-  * declared shape (inlined verbatim) and the NEW candidate back to back,
-  * alternating arms (old,new,old,new,...), in ONE session — same JIT, same
-  * page cache — and asserts both arms produce IDENTICAL result rows before
-  * any wall is reported.
+/** Same-JVM A/B for query and graph-operator reshapes. Cross-JVM walls on
+  * this host swing with page-cache/heap/ambient state, so each experiment
+  * times the OLD shape (inlined verbatim) and the NEW candidate back to
+  * back in ONE session — same JIT, same page cache — under one protocol
+  * ([[run]]): exact result identity first, one warm-up per arm, then the
+  * arms alternate (old,new,old,new,...).
   *
   * Usage: QueryAb <experiment> <outJson> [roundsPerArm]
-  *   experiments: q115, q93
-  * SPARK_GRAFT_SF_DIR selects the fixture.
+  *   experiments: q115, q93, q93p (an sf dir), kcore, pagerank (a
+  *   tools.GraphScale output dir: `edges.parquet` with symmetric u, v)
+  * SPARK_GRAFT_SF_DIR selects the fixture dir.
   */
 object QueryAb {
+
+  /** One arm: builds its result. Iterative arms run eager jobs while
+    * building (per-round checkpoints), so the timed window covers the call
+    * AND the write of the returned frame. */
+  type Arm = () => DataFrame
+
+  /** An experiment does its untimed setup (fixture reads, cached inputs)
+    * and returns its (old, new) arms. */
+  type Experiment = (SparkSession, String) => (Arm, Arm)
 
   private def t(s: SparkSession, d: String, name: String): DataFrame =
     graft.Tables(s, d, name)
@@ -119,50 +132,168 @@ object QueryAb {
   private def q93Par(s: SparkSession, d: String): DataFrame =
     graft.SparkEntry.queries("q93_fuzzy_match")(s, d)
 
-  def main(args: Array[String]): Unit = {
-    val exp = args(0)
-    val outPath = args(1)
-    val rounds = if (args.length > 2) args(2).toInt else 4
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = Sessions.local("graft-query-ab", freezeTolerant = true)
-
-    val (oldF, newF): ((SparkSession, String) => DataFrame, (SparkSession, String) => DataFrame) =
-      exp match {
-        case "q115" => (q115Old, q115New)
-        case "q93"  => (q93Old, q93New)
-        case "q93p" => (q93Old, q93Par)
-        case other  => sys.error(s"unknown experiment $other")
-      }
-
-    // Result identity first (outside any timed window): sorted row strings.
-    val oldRows = oldF(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    val newRows = newF(spark, sfDir).collect().map(_.toString).sorted.toSeq
-    require(oldRows == newRows,
-      s"old/new disagree: ${oldRows.size} vs ${newRows.size} rows; " +
-        s"first diff: ${oldRows.zip(newRows).find(p => p._1 != p._2)}")
-
-    def timeArm(f: (SparkSession, String) => DataFrame): Double = {
-      val t0 = System.nanoTime()
-      f(spark, sfDir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+  // ---- kcore (g11 peel) ----
+  /** OLD (the r13 peel, verbatim shape): degree agg + two LEFT SEMI joins
+    * against the node-count-sized keep set per round, count-based early
+    * exit AFTER the no-op round. NEW is the production
+    * graft.snap.GraphAnalytics.kcore (broadcast anti-join of the cached
+    * dead set). */
+  private def kcoreOld(edges: DataFrame, k: Int, rounds: Int, parts: Int): DataFrame = {
+    var adj = graft.snap.GraphAnalytics.adjacency(edges)
+      .select(col("ego"), col("v").cast("long").as("v"), col("u").cast("long").as("u"))
+      .coalesce(parts).localCheckpoint()
+    var prev = -1L
+    var cur = adj.count()
+    var r = 0
+    while (r < rounds && cur != prev) {
+      val keep = adj.groupBy("ego", "v").agg(count(lit(1)).as("deg"))
+        .filter(col("deg") >= k).select("ego", "v")
+      adj = adj
+        .join(keep, Seq("ego", "v"), "left_semi")
+        .join(keep.withColumnRenamed("v", "u"), Seq("ego", "u"), "left_semi")
+        .localCheckpoint()
+      prev = cur
+      cur = adj.count()
+      r += 1
     }
-    // Warmup both arms once, then alternate old/new `rounds` times each.
-    timeArm(oldF); timeArm(newF)
-    val walls = (1 to rounds).map { _ => (timeArm(oldF), timeArm(newF)) }
+    adj.select(col("ego"), col("v").as("node")).distinct().orderBy("ego", "node")
+  }
+
+  private def kcore(s: SparkSession, dir: String): (Arm, Arm) = {
+    val parts = math.max(s.sparkContext.defaultParallelism, 2)
+    def pairs(): DataFrame = s.read.parquet(s"$dir/edges.parquet")
+      .where(col("u") < col("v"))
+      .select(col("u").as("src"), col("v").as("dst")).withColumn("ego", lit("g"))
+    pairs().count() // warm the parquet footers/page cache
+    (() => kcoreOld(pairs(), k = 10, rounds = 8, parts),
+      () => graft.snap.GraphAnalytics.kcore(pairs(), k = 10, rounds = 8, parts))
+  }
+
+  // ---- pagerank (fixed-point PageRank at scale) ----
+  /** NEW candidate (measured r17, not applied — the ordering against the
+    * production loop is scale-dependent): vertex attr = the CONTRIBUTION
+    * `rank div deg`, one PRIMITIVE Long, so each round's vertex ship moves
+    * an 8-byte primitive array instead of boxed (deg, rank) tuples;
+    * degrees live in a vertex-partitioned RDD cached once and never
+    * re-shipped. Messages, and therefore ranks, are bit-identical to
+    * `pagerankFixedEdges` by construction (msg = Σ rank div deg either
+    * way). */
+  private def pagerankContrib(s: SparkSession, directed: RDD[(Long, Long)],
+      iters: Int, scale: Long): DataFrame = {
+    import s.implicits._
+    val reset = 15L * scale / 100L
+    val g = Graph.fromEdgeTuples(directed, ())
+      .partitionBy(PartitionStrategy.EdgePartition2D)
+    val gd: Graph[Long, Int] = g.outerJoinVertices(g.outDegrees) {
+      (_, _, d) => math.max(d.getOrElse(0).toLong, 1L)
+    }
+    // Same partitioner as every msgs VertexRDD → the per-round leftJoin
+    // is a narrow zip, never shipped.
+    val degs: VertexRDD[Long] = gd.vertices.cache()
+    var rg: Graph[Long, Int] = gd.mapVertices((_, d) => scale / d).cache()
+    val send = (ctx: EdgeContext[Long, Int, Long]) => ctx.sendToDst(ctx.srcAttr)
+    var msgs = rg.aggregateMessages[Long](send, _ + _, TripletFields.Src).cache()
+    msgs.count() // forces + caches rg's edge view before the first join
+    var i = 0
+    while (i + 1 < iters) {
+      val prev = rg
+      val prevMsgs = msgs
+      val updated = degs.leftJoin(msgs) { (_, d, m) =>
+        (reset + 85L * m.getOrElse(0L) / 100L) / d
+      }
+      rg = prev.outerJoinVertices(updated)((_, old, u) => u.getOrElse(old)).cache()
+      msgs = rg.aggregateMessages[Long](send, _ + _, TripletFields.Src).cache()
+      msgs.count() // materializes the new edge view before prev is released
+      prev.unpersistVertices(blocking = false)
+      prev.edges.unpersist(blocking = false)
+      prevMsgs.unpersist(blocking = false)
+      i += 1
+    }
+    // The final round reads off RANKS (not contributions) from the last msgs.
+    val out = degs.leftJoin(msgs) { (_, _, m) => reset + 85L * m.getOrElse(0L) / 100L }
+      .map { case (vid, r) => (vid, r) }.toDF("id", "rank_fp").cache()
+    out.count()
+    msgs.unpersist(blocking = false)
+    rg.unpersistVertices(blocking = false)
+    rg.edges.unpersist(blocking = false)
+    degs.unpersist(blocking = false)
+    out
+  }
+
+  /** OLD = the production `pagerankFixedEdges` barrier loop (attr = (deg,
+    * rank)), NEW = [[pagerankContrib]]; both fed the dump's directed edges
+    * re-shaped exactly as GraphScale feeds them (volume-sized partitions,
+    * cached + counted here, outside every timed window). */
+  private def pagerank(s: SparkSession, dir: String): (Arm, Arm) = {
+    val iters = 10
+    val directed = s.read.parquet(s"$dir/edges.parquet")
+      .select(col("u"), col("v")).rdd
+      .map(r => (r.getLong(0), r.getLong(1)))
+      .repartition(math.max(s.sparkContext.defaultParallelism, 2)).cache()
+    directed.count()
+    (() => GraphxAnalytics.pagerankFixedEdges(s, directed, iters, GraphScale.ScaleAt1M),
+      () => pagerankContrib(s, directed, iters, GraphScale.ScaleAt1M))
+  }
+
+  val experiments: Map[String, Experiment] = Map(
+    "q115" -> ((s, d) => (() => q115Old(s, d), () => q115New(s, d))),
+    "q93" -> ((s, d) => (() => q93Old(s, d), () => q93New(s, d))),
+    "q93p" -> ((s, d) => (() => q93Old(s, d), () => q93Par(s, d))),
+    "kcore" -> kcore,
+    "pagerank" -> pagerank)
+
+  /** The A/B protocol; returns the JSON report, which exists only if the
+    * identity check passed.
+    *  1. Result identity, outside any timed window: an exact two-way
+    *     `exceptAll` (multiset difference, so a duplicated row counts).
+    *  2. One warm-up per arm (JIT, page cache).
+    *  3. `rounds` alternating (old, new) pairs, each arm timed from its
+    *     call through a noop write of its result. */
+  def run(spark: SparkSession, name: String, exp: Experiment, dir: String,
+      rounds: Int): String = {
+    val (oldArm, newArm) = exp(spark, dir)
+
+    val (a, b) = (oldArm(), newArm())
+    val onlyOld = a.exceptAll(b).count()
+    val onlyNew = b.exceptAll(a).count()
+    require(onlyOld == 0L && onlyNew == 0L,
+      s"$name: old/new results differ: $onlyOld rows only in old, $onlyNew only in new")
+    val rows = a.count()
+    a.unpersist(blocking = false); b.unpersist(blocking = false)
+
+    def timeArm(arm: Arm): Double = {
+      val t0 = System.nanoTime()
+      val df = arm()
+      df.write.format("noop").mode("overwrite").save()
+      val wall = (System.nanoTime() - t0) / 1e9
+      df.unpersist(blocking = false)
+      wall
+    }
+    timeArm(oldArm); timeArm(newArm)
+    val walls = (1 to rounds).map { _ => (timeArm(oldArm), timeArm(newArm)) }
     val oldW = walls.map(_._1); val newW = walls.map(_._2)
 
     def fmt(d: Double) = "%.3f".format(d)
     def arr(xs: Seq[Double]) = xs.map(fmt).mkString("[", ",", "]")
-    val json =
-      s"""{"metric":"query_ab","experiment":"$exp","sf_dir":"$sfDir","rows":${oldRows.size},""" +
-        s""""old_walls_sec":${arr(oldW)},"new_walls_sec":${arr(newW)},""" +
-        s""""old_min":${fmt(oldW.min)},"new_min":${fmt(newW.min)},""" +
-        s""""old_median":${fmt(oldW.sorted.apply(oldW.size / 2))},""" +
-        s""""new_median":${fmt(newW.sorted.apply(newW.size / 2))},""" +
-        s""""speedup_min_over_min":${fmt(oldW.min / newW.min)}}"""
+    s"""{"metric":"query_ab","experiment":"$name","dir":"$dir","rows":$rows,""" +
+      s""""old_walls_sec":${arr(oldW)},"new_walls_sec":${arr(newW)},""" +
+      s""""old_min":${fmt(oldW.min)},"new_min":${fmt(newW.min)},""" +
+      s""""old_median":${fmt(oldW.sorted.apply(oldW.size / 2))},""" +
+      s""""new_median":${fmt(newW.sorted.apply(newW.size / 2))},""" +
+      s""""speedup_min_over_min":${fmt(oldW.min / newW.min)}}"""
+  }
+
+  def main(args: Array[String]): Unit = {
+    val name = args(0)
+    val outPath = args(1)
+    val rounds = if (args.length > 2) args(2).toInt else 4
+    val exp = experiments.getOrElse(name, sys.error(
+      s"unknown experiment $name (known: ${experiments.keys.toSeq.sorted.mkString(", ")})"))
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = Sessions.local("graft-query-ab", freezeTolerant = true)
+    val json = try run(spark, name, exp, dir, rounds) finally spark.stop()
     java.nio.file.Files.writeString(java.nio.file.Paths.get(outPath), json)
     println("GRAFT_QUERYAB_JSON")
     println(json)
-    spark.stop()
   }
 }
